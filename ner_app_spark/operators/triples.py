@@ -457,7 +457,7 @@ def extend_ids(
     mask = (1 << 40) - 1
     starts = (
         existing.select(
-            (F.col("id") / F.lit(1 << 40)).cast("long").alias("bucket"),
+            F.shiftright("id", 40).alias("bucket"),
             F.col("id").bitwiseAND(F.lit(mask)).alias("rank"),
         )
         .groupBy("bucket")

@@ -2,22 +2,23 @@
 
 The batch-keyed parquet sink (pipeline.py) gets idempotent replay from
 directory overwrite; this sink gets it the way an Iceberg streaming sink
-does — a **commit marker in the snapshot summary**. Every micro-batch
-append is stamped with ``streaming_commit = "<checkpoint-key>:<batch
-id>"``; before appending, the handler scans the snapshot log for that
-marker and SKIPS the batch if present. A crash between the table commit
-and the source-offset commit replays the batch on restart, the marker is
-found, and nothing is double-appended — append + marker are one atomic
-metadata commit (icelite's O_EXCL version claim), so there is no window
-where the data is in but the marker is not.
+does — a **commit stamp in the snapshot summary**. Every micro-batch
+append stamps icelite's consumer watermark ``{<checkpoint-key>: <batch
+id>}`` (the same mechanism incremental ingestion uses,
+plans/incremental.py); before appending, the handler reads the table's
+watermark for its checkpoint and SKIPS any batch at or below it. A crash
+between the table commit and the source-offset commit replays the batch
+on restart, the stamp is found, and nothing is double-appended — append
++ stamp are one atomic metadata commit (icelite's O_EXCL version claim),
+so there is no window where the data is in but the stamp is not.
 
 The checkpoint key is derived from the checkpoint location (md5, like
 every other portable hash in this repo), because batch ids are only
 unique per streaming checkpoint. Single writer per checkpoint is
 Structured Streaming's own contract; concurrent OTHER writers (another
 stream into the same table, the maintenance job's compaction) are safe —
-appends re-merge on conflict and markers ride in the snapshot log, which
-compaction and expiration never rewrite for retained snapshots.
+appends re-merge on conflict, stamps ride in the snapshot log, and
+expire_snapshots carries expired stamps forward.
 
 Downstream of this sink the table is a normal icelite table: time travel
 over micro-batch history, footer-stats pruning, and run_maintenance.py
@@ -32,7 +33,7 @@ from hashlib import md5
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.extract import extract_phrases_and_triples, fused_triples
-from ..tables.icelite import IceTable, bucket
+from ..tables.icelite import WATERMARK, IceTable, bucket
 
 
 def checkpoint_key(checkpoint_dir: str) -> str:
@@ -51,38 +52,25 @@ def checkpoint_key(checkpoint_dir: str) -> str:
 
 
 def committed_batch_ids(table_path: str, ckpt_key: str) -> set[int]:
-    """Batch ids with a live marker for this checkpoint (snapshot-summary
+    """Batch ids with a live watermark stamp for this checkpoint (own
     stamps only — see last_committed_batch for the replay test, which
-    also honors markers carried forward by history expiration)."""
+    also honors stamps carried forward by history expiration)."""
     if not IceTable.exists(table_path):
         return set()
-    out = set()
-    for s in IceTable(table_path).snapshots():
-        marker = s["summary"].get("streaming_commit", "")
-        key, _, bid = marker.rpartition(":")
-        if key == ckpt_key:
-            out.add(int(bid))
-    return out
+    stamps = (
+        s["summary"].get(WATERMARK, {})
+        for s in IceTable(table_path).snapshots()
+    )
+    return {w[ckpt_key] for w in stamps if ckpt_key in w}
 
 
 def last_committed_batch(table_path: str, ckpt_key: str) -> int | None:
-    """Highest batch id known committed for this checkpoint. Reads both
-    live ``streaming_commit`` markers and the ``streaming_commits_carried``
-    dict that expire_snapshots folds expired markers into. Batch ids are
-    monotone per checkpoint (Structured Streaming's contract), so max is
-    exactly the replay frontier."""
+    """Highest batch id committed for this checkpoint: its watermark.
+    Batch ids are monotone per checkpoint (Structured Streaming's
+    contract), so the newest stamp is exactly the replay frontier."""
     if not IceTable.exists(table_path):
         return None
-    last = None
-    for s in IceTable(table_path).snapshots():
-        marker = s["summary"].get("streaming_commit", "")
-        key, _, bid = marker.rpartition(":")
-        if key == ckpt_key:
-            last = int(bid) if last is None else max(last, int(bid))
-        v = s["summary"].get("streaming_commits_carried", {}).get(ckpt_key)
-        if v is not None:
-            last = int(v) if last is None else max(last, int(v))
-    return last
+    return IceTable(table_path).watermark(ckpt_key)
 
 
 def commit_batch(
@@ -96,27 +84,27 @@ def commit_batch(
     target_files: int | None = None,
 ) -> str | None:
     """Idempotently commit one micro-batch: create the table on the first
-    ever batch, append with the commit marker otherwise, skip (returning
-    None) if this (checkpoint, batch) is already in the snapshot log.
-    The marker rides the SAME atomic metadata commit as the data on both
-    paths (create's initial snapshot carries it via summary_extra), so
-    there is no window where the data is in but the marker is not; a
-    crashed create (directory present, v1 never committed) is detected
-    by IceTable.exists and simply re-created — its half-written files
-    are orphans for the maintenance sweep."""
-    marker = {"streaming_commit": f"{ckpt_key}:{batch_id}"}
+    ever batch, append with the watermark stamp otherwise, skip
+    (returning None) if this (checkpoint, batch) is at or below the
+    table's watermark. The stamp rides the SAME atomic metadata commit
+    as the data on both paths, so there is no window where the data is
+    in but the stamp is not; a crashed create (directory present, v1
+    never committed) is detected by IceTable.exists and simply
+    re-created — its half-written files are orphans for the maintenance
+    sweep."""
+    stamp = {ckpt_key: batch_id}
     if not IceTable.exists(table_path):
         t = IceTable.create(
             spark, table_path, df,
             partition_spec=partition_spec, sort_order=sort_order,
-            target_files=target_files, summary_extra=marker,
+            target_files=target_files, watermark=stamp,
         )
         return t.current_snapshot_id()
     last = last_committed_batch(table_path, ckpt_key)
     if last is not None and batch_id <= last:
         return None  # replayed batch: already committed, exactly-once
     return IceTable(table_path).append(
-        spark, df, target_files=target_files, summary_extra=marker
+        spark, df, target_files=target_files, watermark=stamp
     )
 
 

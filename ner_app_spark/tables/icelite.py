@@ -83,6 +83,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 _FMT = "icelite/1"
+#: snapshot-summary keys of consumer watermarks: a snapshot's own
+#: ``{consumer: value}`` stamp, and the stamps expire_snapshots carried
+#: onto it from expired snapshots
+WATERMARK = "watermark"
+WATERMARK_CARRIED = "watermark_carried"
 
 
 class CommitConflict(Exception):
@@ -561,7 +566,7 @@ class IceTable:
         partition_spec: list[Transform] | None = None,
         target_files: int | None = None,
         sort_order: list[str] | None = None,
-        summary_extra: dict | None = None,
+        watermark: dict | None = None,
     ) -> "IceTable":
         t = IceTable(path)
         os.makedirs(t._meta_dir, exist_ok=True)
@@ -574,8 +579,8 @@ class IceTable:
             e["seq"] = 0
         sid = t._write_manifest(entries)
         entry = t._snap_entry(sid, None, "create", entries, entries)
-        if summary_extra:  # e.g. a streaming sink's commit marker — must
-            entry["summary"].update(summary_extra)  # ride the ONE commit
+        if watermark:  # rides the ONE commit with the data
+            entry["summary"][WATERMARK] = dict(watermark)
         meta = {
             "format": _FMT,
             "schema_json": json.loads(df.schema.json()),
@@ -673,16 +678,15 @@ class IceTable:
         df: DataFrame,
         target_files: int | None = None,
         max_retries: int = 5,
-        summary_extra: dict | None = None,
+        watermark: dict | None = None,
     ) -> str:
         """Commit ``df`` as a new snapshot on top of current. New columns
         widen the snapshot schema (add-column evolution); columns the
         table has but ``df`` lacks are null-filled. On CommitConflict the
         manifest merge retries against the winner — the data files were
-        written once and are reused verbatim. ``summary_extra`` merges
-        into the snapshot's summary — the hook a streaming sink uses to
-        stamp its (checkpoint, batch_id) commit marker (Iceberg stores
-        the same thing in snapshot summary properties)."""
+        written once and are reused verbatim. ``watermark`` is a
+        ``{consumer: value}`` progress stamp committed atomically with
+        the data (see :meth:`watermark`)."""
         meta = self._read_meta()
         spec = [Transform.from_json(d) for d in meta["partition_spec"]]
         schema = StructType.fromJson(meta["schema_json"])
@@ -704,8 +708,8 @@ class IceTable:
             entry = self._snap_entry(
                 sid, meta["current_snapshot_id"], "append", added, files
             )
-            if summary_extra:
-                entry["summary"].update(summary_extra)
+            if watermark:
+                entry["summary"][WATERMARK] = dict(watermark)
             new_meta["snapshots"] = meta["snapshots"] + [entry]
             try:
                 self._commit(new_meta, expected_version=meta["_version"])
@@ -1090,68 +1094,41 @@ class IceTable:
                 fs, ds = self._read_snap(s["id"])
                 drop_files |= {e["path"] for e in fs + ds}
             drop_files -= keep_files
-            # carry streaming commit markers forward: expired snapshots
-            # may hold the (checkpoint, batch-id) stamps a streaming sink
-            # uses for exactly-once replay detection (icesink.py). Batch
-            # ids are monotone per checkpoint, so a {key: max_id} dict on
-            # the oldest retained snapshot preserves the full guarantee
-            # in O(#checkpoints) space.
-            carried: dict[str, int] = {}
-
-            def _absorb(summary: dict) -> None:
-                marker = summary.get("streaming_commit", "")
-                key, _, bid = marker.rpartition(":")
-                if key:
-                    carried[key] = max(carried.get(key, -1), int(bid))
-                for k, v in summary.get(
-                    "streaming_commits_carried", {}
-                ).items():
-                    carried[k] = max(carried.get(k, -1), int(v))
-
-            for s in expired:
-                _absorb(s["summary"])
-            retained = [dict(s) for s in retained]
-            if carried:
-                _absorb(retained[0]["summary"])
-                retained[0]["summary"] = {
-                    **retained[0]["summary"],
-                    "streaming_commits_carried": carried,
-                }
-            # carry incremental-ingestion high-water marks the same way
-            # (plans/incremental.py): an expired snapshot's marker moves
-            # to the FIRST retained snapshot after it in log order, so
-            # "newest marker wins" still resolves correctly even when
-            # tag-pinned snapshots leave holes in the retained history
+            # carry consumer watermarks forward: an expired snapshot's
+            # stamps move to the FIRST retained snapshot after it in log
+            # order, so "newest stamp wins" (watermark()) resolves the
+            # same even when tag-pinned snapshots leave holes in the
+            # retained history
             pos = {s["id"]: i for i, s in enumerate(snaps)}
-            ret_pos = sorted((pos[s["id"]], i) for i, s in enumerate(retained))
-            set_this_pass: set[int] = set()
+            retained = [dict(s) for s in retained]
+            set_this_pass: set[tuple[int, str]] = set()
             for s in expired:  # log order: later absorptions are newer
-                inc = s["summary"].get("incremental_source") or s[
-                    "summary"
-                ].get("incremental_source_carried")
-                if not inc:
-                    continue
+                stamps = {**s["summary"].get(WATERMARK_CARRIED, {}),
+                          **s["summary"].get(WATERMARK, {})}
+                # current is always last and retained: an anchor exists
                 anchor = next(
-                    (i for p, i in ret_pos if p > pos[s["id"]]), None
+                    i for i, r in enumerate(retained)
+                    if pos[r["id"]] > pos[s["id"]]
                 )
-                if anchor is None:  # current is always last and retained
-                    continue
                 a = retained[anchor]
-                # an anchor's own marker is newer than anything before
-                # it; a PRE-EXISTING carried value always originates
-                # later in the log than a snapshot expiring in a LATER
-                # pass (else that pass's anchor would have been earlier)
-                # — both win over this absorption. Within this pass,
-                # later-position absorptions overwrite earlier ones.
-                if "incremental_source" in a["summary"] or (
-                    "incremental_source_carried" in a["summary"]
-                    and anchor not in set_this_pass
-                ):
-                    continue
-                set_this_pass.add(anchor)
-                a["summary"] = {
-                    **a["summary"], "incremental_source_carried": inc,
-                }
+                own = a["summary"].get(WATERMARK, {})
+                carried = dict(a["summary"].get(WATERMARK_CARRIED, {}))
+                for consumer, v in stamps.items():
+                    # an anchor's own stamp is newer than anything before
+                    # it; a PRE-EXISTING carried stamp always originates
+                    # later in the log than a snapshot expiring in a
+                    # LATER pass (else that pass's anchor would have been
+                    # earlier) — both win over this absorption. Within
+                    # this pass, later absorptions overwrite earlier ones.
+                    if consumer in own or (
+                        consumer in carried
+                        and (anchor, consumer) not in set_this_pass
+                    ):
+                        continue
+                    set_this_pass.add((anchor, consumer))
+                    carried[consumer] = v
+                if carried:
+                    a["summary"] = {**a["summary"], WATERMARK_CARRIED: carried}
             new_meta = dict(meta)
             new_meta["snapshots"] = retained
             try:
@@ -1221,6 +1198,18 @@ class IceTable:
 
     def snapshots(self) -> list[dict]:
         return self._read_meta()["snapshots"]
+
+    def watermark(self, consumer: str):
+        """The newest (log-order) watermark ``consumer`` stamped via
+        create/append, or None. Within one snapshot its own stamp beats
+        a carried one (a carried value predates the snapshot it is
+        anchored on), so the answer is unchanged by history expiry."""
+        for s in reversed(self.snapshots()):
+            for key in (WATERMARK, WATERMARK_CARRIED):
+                v = s["summary"].get(key, {}).get(consumer)
+                if v is not None:
+                    return v
+        return None
 
     def metadata_df(self, spark: SparkSession, kind: str) -> DataFrame:
         """Queryable metadata tables, like Iceberg's ``table.snapshots``
@@ -1792,7 +1781,7 @@ def publish_pipeline_tables(
         ("triples", output.triples, [bucket("subj", 16)], ["subj"]),
     ):
         path = os.path.join(root, name)
-        if os.path.exists(os.path.join(path, "metadata")):
+        if IceTable.exists(path):
             t = IceTable(path)
             t.overwrite(spark, df, target_files=target_files)
         else:

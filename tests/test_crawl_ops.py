@@ -355,3 +355,24 @@ def test_extend_ids_preserves_and_continues(spark):
     for e, i in m2.items():
         if e not in m1:
             assert (i & ((1 << 40) - 1)) > by_bucket.get(i >> 40, -1)
+
+
+def test_extend_ids_exact_bucket_above_2_pow_53(spark):
+    """Bucket recovery must be exact for every int64 id: at bucket 8192
+    the id passes 2^53, where a float division rounds (8192<<40) + 2^40
+    - 1 up into bucket 8193 and the novel value minted there collides
+    with the existing 8194<<40."""
+    from ner_app_spark.operators.triples import extend_ids
+
+    existing = spark.createDataFrame(
+        [("full", (8192 << 40) + (1 << 40) - 1), ("next", 8194 << 40)],
+        "entity string, id long",
+    )
+    # md5-u32 of "novel22134" is 8193 mod 16384
+    novel = spark.createDataFrame([("novel22134",)], "entity string")
+    ids = {
+        r["entity"]: r["id"]
+        for r in extend_ids(existing, novel, n_buckets=16384).collect()
+    }
+    assert ids["novel22134"] == 8193 << 40
+    assert len(ids) == len(set(ids.values())) == 3, "no collisions"

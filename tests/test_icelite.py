@@ -315,6 +315,31 @@ def test_publish_pipeline_tables(spark, tmp_path):
     assert rep.files_kept < rep.files_total
 
 
+def test_publish_recovers_from_crashed_create(spark, tmp_path):
+    """A create that crashed before committing v1 leaves a bare
+    ``metadata/`` directory; the next publish must create the table
+    instead of wedging on overwrite of a table that does not exist."""
+    from types import SimpleNamespace
+
+    from ner_app_spark.tables.icelite import publish_pipeline_tables
+
+    root = tmp_path / "kg"
+    for name in ("nodes", "edges", "triples"):
+        (root / name / "metadata").mkdir(parents=True)
+    out = SimpleNamespace(
+        nodes=spark.createDataFrame([(1, "n")], "node_id long, text string"),
+        edges=spark.createDataFrame([(1, 2)], "src long, dst long"),
+        triples=spark.createDataFrame(
+            [("s", "p", "o")], "subj string, pred string, obj string"
+        ),
+    )
+    tables = publish_pipeline_tables(spark, out, str(root))
+    for name, t in tables.items():
+        assert IceTable.exists(str(root / name))
+        assert [s["operation"] for s in t.snapshots()] == ["create"]
+        assert t.scan(spark)[0].count() == 1
+
+
 def test_metadata_is_plain_json(spark, events, tmp_path):
     """The format is inspectable: metadata + manifests are valid JSON with
     the documented shape (judge/debug surface, mirrors the spec)."""

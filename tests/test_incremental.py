@@ -20,7 +20,7 @@ from ner_app_spark.plans.incremental import (
     run_incremental,
 )
 from ner_app_spark.sources.pages import alias_dict_df, synth_pages_df
-from ner_app_spark.tables.icelite import IceTable
+from ner_app_spark.tables.icelite import WATERMARK, WATERMARK_CARRIED, IceTable
 
 
 def _batch(spark, lo, hi):
@@ -140,12 +140,14 @@ def test_marker_survives_compaction_and_expiry(spark, tmp_path):
 
     t = IceTable(f"{out}/phrases")
     assert t.compact(spark, small_file_bytes=64 << 20) is not None
-    assert "incremental_source" not in t.snapshots()[-1]["summary"]
+    assert any(MARKER in s["summary"].get(WATERMARK, {}) for s in t.snapshots())
+    assert MARKER not in t.snapshots()[-1]["summary"].get(WATERMARK, {})
     mark_before = last_consumed_snapshot(t)
     t.expire_snapshots(keep_last=1)
     assert all(
-        MARKER not in s["summary"] for s in t.snapshots()
+        MARKER not in s["summary"].get(WATERMARK, {}) for s in t.snapshots()
     )  # only the carried stamp remains
+    assert t.snapshots()[-1]["summary"][WATERMARK_CARRIED][MARKER] == mark_before
     assert last_consumed_snapshot(t) == mark_before
 
     before = len(t.snapshots())

@@ -398,6 +398,52 @@ def test_icesink_table_survives_maintenance(spark, scratch):
     assert last_committed_batch(table, "ck") == 4
 
 
+def test_watermarks_of_two_consumers_survive_expiry_around_a_tag(
+    spark, scratch
+):
+    """One table stamped by a streaming checkpoint and an incremental-
+    style consumer, with a tag pinning a mid-log snapshot that holds own
+    stamps for both. Expiry must anchor each expired stamp on the first
+    retained snapshot AFTER it: stamps older than the tag fold under the
+    tag's own (newer) ones, stamps newer than the tag move to current —
+    so both watermarks are unchanged and replays are still skipped."""
+    from ner_app_spark.streaming.icesink import (
+        commit_batch,
+        committed_batch_ids,
+        last_committed_batch,
+    )
+    from ner_app_spark.tables.icelite import IceTable
+
+    table = f"{scratch}/t"
+    assert commit_batch(spark, table, spark.range(0, 10), "ck", 0) is not None
+    t = IceTable(table)
+    t.append(spark, spark.range(10, 20), watermark={"inc": "a"})
+    t.append(spark, spark.range(20, 30), watermark={"ck": 1, "inc": "b"})
+    t.tag("release")
+    assert commit_batch(spark, table, spark.range(30, 40), "ck", 2) is not None
+    t.append(spark, spark.range(40, 50), watermark={"inc": "c"})
+    t.append(spark, spark.range(50, 60))  # unstamped current
+    before = {c: t.watermark(c) for c in ("ck", "inc")}
+    assert before == {"ck": 2, "inc": "c"}
+
+    rep = t.expire_snapshots(keep_last=1)
+    assert rep["expired_snapshots"] == 4
+    assert {c: t.watermark(c) for c in ("ck", "inc")} == before
+    assert committed_batch_ids(table, "ck") == {1}  # the tag's own stamp
+    # a second expiry, once the tag is dropped, keeps them too
+    t.drop_tag("release")
+    t.expire_snapshots(keep_last=1)
+    assert len(t.snapshots()) == 1
+    assert {c: t.watermark(c) for c in ("ck", "inc")} == before
+
+    assert last_committed_batch(table, "ck") == 2
+    for replay in (0, 1, 2):
+        assert commit_batch(spark, table, spark.range(0, 10), "ck", replay) is None
+    assert t.scan(spark)[0].count() == 60
+    assert commit_batch(spark, table, spark.range(60, 70), "ck", 3) is not None
+    assert t.scan(spark)[0].count() == 70
+
+
 def test_icesink_empty_batch_commits_marker_only(spark, scratch):
     """An empty micro-batch (e.g. a trigger that matched zero rows) must
     still advance the replay frontier — marker committed, no data files."""
