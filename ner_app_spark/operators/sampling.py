@@ -90,13 +90,18 @@ def negative_samples(triples: DataFrame, n_buckets: int = 64) -> DataFrame:
     Everything is md5/conv expression work + equi-joins + partitioned
     windows: the DuckDB oracle (oracles._kg_negative_samples_sql)
     replays every step bit-exactly over the same inlined pages.
+
+    Precondition: triples with a NULL subj, pred or obj are dropped on
+    entry. ``concat_ws`` skips NULLs, so ``(a, NULL, b)`` and ``(a, b,
+    NULL)`` would hash to the same key (and the oracle's ``||`` yields
+    NULL instead); pipeline triples are never NULL.
     """
     shift = n_buckets.bit_length() - 1
     if (1 << shift) != n_buckets:
         raise ValueError("n_buckets must be a power of two")
     from pyspark.sql.window import Window
 
-    pos = triples.select("subj", "pred", "obj").distinct()
+    pos = triples.select("subj", "pred", "obj").dropna().distinct()
     ents = pos.select(F.col("obj").alias("cand")).distinct()
     dim = ents.withColumn("bucket", _md5_u32_le(F.col("cand")) % n_buckets)
     w = Window.partitionBy("bucket").orderBy("cand")
@@ -167,8 +172,11 @@ def edge_split(triples: DataFrame) -> DataFrame:
     of re-running the upstream extraction lineage. No windows, no
     driver collect. The DuckDB oracle (oracles._kg_edge_split_sql)
     replays bucket arithmetic and repair rule bit-exactly.
+
+    Precondition: triples with a NULL subj, pred or obj are dropped on
+    entry, for the same hash-key reason as ``negative_samples``.
     """
-    pos = triples.select("subj", "pred", "obj").distinct()
+    pos = triples.select("subj", "pred", "obj").dropna().distinct()
     h = _md5_u32_le(F.concat_ws("\x1f", "subj", "pred", "obj"))
     prov = pos.select(
         "subj",

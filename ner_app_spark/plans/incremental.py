@@ -56,6 +56,18 @@ def last_consumed_snapshot(table: IceTable) -> str | None:
     return table.watermark(MARKER)
 
 
+def _added_records(table: IceTable, sid: str) -> int:
+    """Rows committed by OUR snapshot ``sid``, read from the log rather
+    than the tail (a concurrent writer may have committed after us).
+    Newest match first: an append that adds no files keeps its parent's
+    content-addressed id, so an older snapshot can share it."""
+    return next(
+        int(s["summary"]["added_records"])
+        for s in reversed(table.snapshots())
+        if s["id"] == sid
+    )
+
+
 def run_incremental(
     spark: SparkSession,
     pages_path: str,
@@ -70,7 +82,11 @@ def run_incremental(
 
     The fused extract is the expensive stage; it runs once per DISTINCT
     high-water mark among the output tables (normally once — the marks
-    only diverge if a previous run crashed between its two appends)."""
+    only diverge if a previous run crashed between its two appends).
+
+    Each output counter is the ``added_records`` of the snapshot that
+    run's own append (or create) committed — the writer already knows
+    how many rows it wrote, so no frame is re-executed just to count it."""
     from ..session import scratch_base
 
     pages_t = IceTable(pages_path)
@@ -143,16 +159,18 @@ def run_incremental(
                 df = frames[name]
                 path = out_paths[name]
                 if IceTable.exists(path):
-                    IceTable(path).append(
+                    t = IceTable(path)
+                    sid = t.append(
                         spark, df, target_files=target_files,
                         watermark={MARKER: to_sid},
                     )
                 else:
-                    IceTable.create(
+                    t = IceTable.create(
                         spark, path, df, target_files=target_files,
                         watermark={MARKER: to_sid},
                     )
-                counters[name] += df.count()
+                    sid = t.snapshots()[0]["id"]
+                counters[name] += _added_records(t, sid)
                 counters["tables_caught_up"].append(name)
             counters["pages"] += n_pages
         finally:

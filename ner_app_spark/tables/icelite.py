@@ -17,11 +17,11 @@ parquet files + JSON metadata:
     files are immutable and uniquely named, so retry is metadata-only;
   * **manifest file stats + scan pruning** — the manifest records per
     data file: record count, byte size, and per-column min/max/null
-    counts harvested from the parquet FOOTERS by a distributed job
-    (``mapInPandas`` over the file list — footer-only reads, no data
-    I/O, no driver-side footer loop). ``scan(filters=...)`` drops every
-    file whose stats cannot satisfy the filter before Spark ever plans
-    the read. At 10^12 rows this is THE mechanism that turns a
+    counts read from the new files' parquet FOOTERS on the driver, where
+    the writer has just listed and moved each of them (footer-only
+    reads, no data I/O, no Spark job per commit). ``scan(filters=...)``
+    drops every file whose stats cannot satisfy the filter before Spark
+    ever plans the read. At 10^12 rows this is THE mechanism that turns a
     full-table scan into a handful of files — partition pruning as data
     layout, not directory layout;
   * **hidden partitioning (Iceberg transforms)** — a partition spec of
@@ -52,14 +52,13 @@ parquet files + JSON metadata:
     transform at all.
 
 Deliberate simplifications vs the real spec, each declared: one JSON
-manifest per snapshot instead of a manifest-list tree (sharding the file
-list across manifest files is a pure fan-out of the same footer job);
-equality deletes only (no positional deletes — those need a writer that
-tracks row offsets); tags (named immutable refs, expiry-exempt — see
+manifest per snapshot instead of a manifest-list tree; equality deletes
+only (no positional deletes — those need a writer that tracks row
+offsets); tags (named immutable refs, expiry-exempt — see
 :meth:`IceTable.tag`) but no writable branches. Metadata stays O(files)
-JSON — at a
-real deployment's file counts the manifest job's .collect() becomes a
-manifest-file write per task, which is exactly what Iceberg does.
+JSON built on the driver, like the commit itself — at a real
+deployment's file counts each write task would emit its own files'
+manifest entries, which is exactly what Iceberg's writers do.
 
 Reference behavior reproduced: the reference app persists analysis
 results content-addressed and write-once (src/services/text_service.py:
@@ -238,92 +237,69 @@ def _coerce_literal(v, stat):
     return v
 
 
-def _footer_entries(spark: SparkSession, paths: list[str]) -> list[dict]:
-    """One manifest entry per data file, harvested from parquet footers by
-    a DISTRIBUTED job (footer-only I/O; ~kB per file regardless of data
-    size). Returns [{path, record_count, size_bytes, stats:{col:
-    {min,max,nulls}}}]. The .collect() is manifest metadata — O(files)
-    small dicts; at deployment file counts this becomes a per-task
-    manifest-shard write (see module docstring)."""
-    if not paths:
-        return []
+def _footer_entries(paths: list[str]) -> list[dict]:
+    """One manifest entry per data file, read from its parquet footer on
+    the driver (footer-only I/O; ~kB per file regardless of data size).
+    Returns [{path, record_count, size_bytes, stats:{col:{min,max,
+    nulls}}}] sorted by path. The driver is where the writer already
+    listed and moved every new file, so a commit stays O(files) driver
+    work either way — a Spark job here would only add scheduling and
+    Python-worker round trips per write."""
+    import pyarrow.parquet as pq
 
-    def harvest(batches):
-        import pandas as pd
-        import pyarrow.parquet as pq
-
-        for b in batches:
-            rows = []
-            for p in b["path"]:
-                meta = pq.ParquetFile(p).metadata
-                ncols = meta.num_columns
-                agg: dict[str, dict] = {}
-                usable: dict[str, bool] = {}
-                for g in range(meta.num_row_groups):
-                    rg = meta.row_group(g)
-                    for i in range(ncols):
-                        col = rg.column(i)
-                        name = col.path_in_schema
-                        if "." in name:  # nested fields: not pruneable
-                            usable[name] = False
-                            continue
-                        st = col.statistics
-                        a = agg.setdefault(
-                            name, {"min": None, "max": None, "nulls": 0}
-                        )
-                        if st is None or not st.has_min_max:
-                            # a row group without stats poisons min/max
-                            # (but null counts may still be complete)
-                            if st is None or st.null_count is None:
-                                usable[name] = False
-                            else:
-                                a["nulls"] += st.null_count
-                                if st.num_values > 0:
-                                    usable[name] = False
-                                else:
-                                    # all-null row group: min/max stay
-                                    # None, which IS the stat ("no
-                                    # non-null values") — keep usable
-                                    usable.setdefault(name, True)
-                            continue
-                        usable.setdefault(name, True)
-                        a["nulls"] += st.null_count or 0
+    out = []
+    for p in sorted(paths):
+        meta = pq.ParquetFile(p).metadata
+        ncols = meta.num_columns
+        agg: dict[str, dict] = {}
+        usable: dict[str, bool] = {}
+        for g in range(meta.num_row_groups):
+            rg = meta.row_group(g)
+            for i in range(ncols):
+                col = rg.column(i)
+                name = col.path_in_schema
+                if "." in name:  # nested fields: not pruneable
+                    usable[name] = False
+                    continue
+                st = col.statistics
+                a = agg.setdefault(name, {"min": None, "max": None, "nulls": 0})
+                if st is None or not st.has_min_max:
+                    # a row group without stats poisons min/max (but
+                    # null counts may still be complete)
+                    if st is None or st.null_count is None:
+                        usable[name] = False
+                    else:
+                        a["nulls"] += st.null_count
                         if st.num_values > 0:
-                            if a["min"] is None or st.min < a["min"]:
-                                a["min"] = st.min
-                            if a["max"] is None or st.max > a["max"]:
-                                a["max"] = st.max
-                stats = {}
-                for name, a in agg.items():
-                    if not usable.get(name, False):
-                        continue
-                    emin, emax = _enc_stat(a["min"]), _enc_stat(a["max"])
-                    if (emin is None) != (a["min"] is None):
-                        continue  # unencodable type (binary etc.)
-                    stats[name] = {
-                        "min": emin, "max": emax, "nulls": a["nulls"]
-                    }
-                rows.append(
-                    (p, meta.num_rows, os.path.getsize(p), json.dumps(stats))
-                )
-            yield pd.DataFrame(
-                rows, columns=["path", "record_count", "size_bytes", "stats"]
-            )
-
-    pdf = spark.createDataFrame([(p,) for p in paths], "path string")
-    out = pdf.repartition(min(len(paths), 32)).mapInPandas(
-        harvest,
-        schema="path string, record_count long, size_bytes long, stats string",
-    ).collect()
-    return [
-        {
-            "path": r["path"],
-            "record_count": r["record_count"],
-            "size_bytes": r["size_bytes"],
-            "stats": json.loads(r["stats"]),
-        }
-        for r in sorted(out, key=lambda r: r["path"])
-    ]
+                            usable[name] = False
+                        else:
+                            # all-null row group: min/max stay None,
+                            # which IS the stat ("no non-null values")
+                            # — keep usable
+                            usable.setdefault(name, True)
+                    continue
+                usable.setdefault(name, True)
+                a["nulls"] += st.null_count or 0
+                if st.num_values > 0:
+                    if a["min"] is None or st.min < a["min"]:
+                        a["min"] = st.min
+                    if a["max"] is None or st.max > a["max"]:
+                        a["max"] = st.max
+        stats = {}
+        for name, a in agg.items():
+            if not usable.get(name, False):
+                continue
+            emin, emax = _enc_stat(a["min"]), _enc_stat(a["max"])
+            if (emin is None) != (a["min"] is None):
+                continue  # unencodable type (binary etc.)
+            stats[name] = {"min": emin, "max": emax, "nulls": a["nulls"]}
+        out.append({
+            "path": p,
+            "record_count": meta.num_rows,
+            "size_bytes": os.path.getsize(p),
+            "stats": stats,
+        })
+    return out
 
 
 # ---------------------------------------------------------------- pruning
@@ -615,7 +591,7 @@ class IceTable:
         sort_cols: list[str] | None = None,
     ) -> list[dict]:
         """Write immutable, uniquely-named data files clustered by the
-        partition transforms, then harvest their footer stats. The
+        partition transforms, then read their footer stats. The
         hidden ``_p_*`` columns are stored IN the files — their per-file
         min/max are the manifest's partition tuple. ``sort_cols`` is the
         table's write sort order (Iceberg SortOrder): within a partition
@@ -661,7 +637,7 @@ class IceTable:
                 paths.append(dst)
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
-        entries = _footer_entries(spark, paths)
+        entries = _footer_entries(paths)
         # drop zero-record part files (an empty input partition still
         # writes one): they carry nothing, and a streaming sink's empty
         # triggers would otherwise grow the manifest forever

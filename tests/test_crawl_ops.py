@@ -187,6 +187,28 @@ def test_edge_split_repair_is_real_and_stable(spark):
     assert sorted(map(tuple, rows)) == again
 
 
+def test_sampling_drops_null_bearing_triples(spark):
+    """``concat_ws`` skips NULLs, so (a, NULL, b) and (a, b, NULL) share
+    one hash key; both samplers drop NULL-bearing triples on entry, so
+    neither the colliding pair nor a NULL object reaches their output."""
+    schema = "subj string, pred string, obj string"
+    holed = spark.createDataFrame(
+        [("ent1", None, "ent2"), ("ent1", "ent2", None), (None, "P1", "ent3")],
+        schema,
+    )
+    keys = holed.select(
+        F.concat_ws("\x1f", "subj", "pred", "obj").alias("k")
+    ).collect()
+    assert keys[0]["k"] == keys[1]["k"], "the collision this guards against"
+
+    clean = _many_triples(spark)
+    dirty = clean.union(holed)
+    for op in (edge_split, lambda df: negative_samples(df, n_buckets=4)):
+        got = [tuple(r) for r in op(dirty).collect()]
+        assert all(None not in r[:3] for r in got)
+        assert sorted(got) == sorted(map(tuple, op(clean).collect()))
+
+
 def test_frontier_waves_politeness_bound(spark):
     pages = synth_pages_df(spark, 60)
     frontier = webgraph.crawl_frontier(pages, iters=2)

@@ -21,6 +21,7 @@ from ner_app_spark.tables.icelite import (
     CommitConflict,
     IceTable,
     _bucket_py,
+    _footer_entries,
     bucket,
     day,
     identity,
@@ -357,6 +358,68 @@ def test_metadata_is_plain_json(spark, events, tmp_path):
     # footer stats carry per-column min/max/null counts
     assert "event_id" in entry["stats"]
     assert set(entry["stats"]["event_id"]) == {"min", "max", "nulls"}
+
+
+def test_footer_entries_merge_row_group_stats(tmp_path):
+    """The manifest-entry contract on one multi-row-group file: min/max
+    merged and null counts summed across row groups, an all-null row
+    group leaves the column usable, binary and nested columns carry no
+    stats, and record count / byte size are exact."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = str(tmp_path / "f.parquet")
+    tbl = pa.table({
+        "i": pa.array([5, 3, 9, -2, 7, 4], pa.int64()),
+        "n": pa.array([None, None, None, 8, None, 6], pa.int64()),
+        "b": pa.array([b"x", b"y", b"z", b"u", b"v", b"w"], pa.binary()),
+        "s": pa.array(
+            [{"a": k} for k in range(6)], pa.struct([("a", pa.int64())])
+        ),
+    })
+    pq.write_table(tbl, p, row_group_size=3)
+    assert pq.ParquetFile(p).metadata.num_row_groups == 2
+
+    (entry,) = _footer_entries([p])
+    assert entry["path"] == p
+    assert entry["record_count"] == 6
+    assert entry["size_bytes"] == os.path.getsize(p)
+    st = entry["stats"]
+    assert st["i"] == {
+        "min": {"t": "int", "v": -2}, "max": {"t": "int", "v": 9}, "nulls": 0
+    }
+    # row group 0 of `n` is all null: its null count is summed and the
+    # other group's min/max stand
+    assert st["n"] == {
+        "min": {"t": "int", "v": 6}, "max": {"t": "int", "v": 8}, "nulls": 4
+    }
+    assert set(st) == {"i", "n"}, "binary and nested columns are dropped"
+
+
+def test_append_launches_no_more_jobs_than_a_plain_write(spark, tmp_path):
+    """Committing a snapshot is metadata work on the driver: an append
+    runs the data write's Spark jobs and nothing else."""
+    sc = spark.sparkContext
+    df = spark.createDataFrame(
+        [(i, f"k{i % 3}") for i in range(20)], "id long, k string"
+    )
+    t = IceTable.create(spark, str(tmp_path / "t"), df)
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    n_append = jobs("icelite-append", lambda: t.append(spark, df))
+    n_write = jobs(
+        "plain-write", lambda: df.write.parquet(str(tmp_path / "plain"))
+    )
+    assert n_write >= 1
+    assert n_append <= n_write
 
 
 # ----------------------------------------------------- table maintenance

@@ -154,3 +154,44 @@ def test_marker_survives_compaction_and_expiry(spark, tmp_path):
     c = run_incremental(spark, pages_path, out, n_parts=4)
     assert "phrases" not in c["tables_caught_up"]
     assert len(IceTable(f"{out}/phrases").snapshots()) == before
+
+
+def test_counters_equal_committed_row_deltas(spark, tmp_path):
+    """Each output counter is exactly the rows that run added to its
+    table: bootstrap, a dump, a dump whose pages all fail the language
+    gate (zero-row commits that still advance the watermark), and a
+    no-op run."""
+    pages_path = str(tmp_path / "pages")
+    out = str(tmp_path / "kg")
+    names = ("phrases", "triples", "links")
+    IceTable.create(spark, pages_path, _batch(spark, 0, 30), target_files=1)
+
+    def rows():
+        return {
+            n: IceTable(f"{out}/{n}").scan(spark)[0].count()
+            if IceTable.exists(f"{out}/{n}") else 0
+            for n in names
+        }
+
+    def run_and_check(expect_pages):
+        before = rows()
+        c = run_incremental(spark, pages_path, out, n_parts=4)
+        after = rows()
+        assert c["pages"] == expect_pages
+        for n in names:
+            assert c[n] == after[n] - before[n], n
+        return c
+
+    boot = run_and_check(30)
+    assert all(boot[n] > 0 for n in names)
+    IceTable(pages_path).append(spark, _batch(spark, 30, 50), target_files=1)
+    assert run_and_check(20)["triples"] > 0
+    IceTable(pages_path).append(
+        spark, _batch(spark, 50, 60).withColumn("lang", F.lit("xx")),
+        target_files=1,
+    )
+    gated = run_and_check(10)
+    assert gated["tables_caught_up"] and all(gated[n] == 0 for n in names)
+    noop = run_and_check(0)
+    assert noop["tables_caught_up"] == []
+    assert all(noop[n] == 0 for n in names)
